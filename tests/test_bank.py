@@ -53,7 +53,7 @@ def test_string_keys_documents(spark, documents):
 
 
 @pytest.mark.parametrize("payload", ["rows", "digest", "auto"])
-@pytest.mark.parametrize("variant", ["xor8", "xor16"])
+@pytest.mark.parametrize("variant", xb.VARIANTS)
 def test_contains_join_matches_broadcast(spark, lineitem, payload, variant):
     b = xb.build_bank(lineitem, "l_partkey", variant=variant, num_shards=4)
     keys = lineitem.select("l_partkey").distinct()
@@ -84,14 +84,6 @@ def test_contains_join_digest_wide_payload_and_duplicates(spark, lineitem):
         probes, "l_partkey", b, "hit", payload="auto"
     )._jdf.queryExecution().executedPlan().toString()
     assert "Join" in auto_plan  # auto chose the digest/join-back shape
-    # the forced join-back modes must produce identical results to the
-    # default AQE-decided join-back
-    for mode in ("broadcast", "shuffle"):
-        forced = xb.contains_join(
-            probes, "l_partkey", b, "hit", payload="digest", join_back=mode
-        )
-        assert forced.count() == n
-        assert forced.where(~F.col("hit")).count() == 0
 
 
 def test_merge_associativity(spark, lineitem):
@@ -187,6 +179,72 @@ def test_persistence_roundtrip_and_resume(spark, lineitem, tmp_path):
     assert key(resumed.collect()) == key(b.collect())
 
 
+def test_resume_rejects_mismatched_checkpoint(spark, lineitem, tmp_path):
+    """A checkpoint built under other parameters names other key ranges:
+    resuming it must raise, never append shards of a different layout."""
+    full = xb.build_bank(lineitem, "l_orderkey", num_shards=4)
+    path = str(tmp_path / "bank_mismatch")
+    xb.write_bank(full.where(F.col("shard") < 2), path)
+    for kw in ({"num_shards": 8}, {"variant": "fuse8"},
+               {"hash_strategy": "murmur64"}):
+        args = {"num_shards": 4, **kw}
+        with pytest.raises(ValueError, match=next(iter(kw))):
+            xb.resume_build(spark, lineitem, "l_orderkey", path, **args)
+    # the checkpoint is untouched by the refused resumes
+    assert sorted(r["shard"] for r in xb.read_bank(spark, path).collect()) == [0, 1]
+
+
+def _expect_probe_error(probe_fn, match):
+    """Run a probe; a malformed bank must raise (ValueError from the call
+    itself, or a failed job carrying the executor's ValueError) — never
+    answer."""
+    with pytest.raises(Exception, match=match) as info:
+        probe_fn().collect()
+    assert "ValueError" in f"{info.type.__name__}: {info.value}"
+
+
+def test_truncated_shard_raises(spark, lineitem):
+    """One shard's fingerprints cut short: every probe path refuses the
+    bank, naming the shard, instead of reading the next shard's bytes."""
+    b = xb.build_bank(lineitem, "l_orderkey", num_shards=4)
+    bad = b.withColumn(
+        "fingerprints",
+        F.when(
+            F.col("shard") == 1,
+            F.expr("substring(fingerprints, 1, length(fingerprints) - 3)"),
+        ).otherwise(F.col("fingerprints")),
+    )
+    keys = lineitem.select("l_orderkey").distinct()
+    with pytest.raises(ValueError, match="shard 1"):
+        xb.contains(keys, "l_orderkey", bad)
+    for payload in ("rows", "digest"):
+        _expect_probe_error(
+            lambda: xb.contains_join(keys, "l_orderkey", bad, payload=payload),
+            "shard 1",
+        )
+
+
+def test_duplicate_shard_id_raises(spark, lineitem):
+    b = xb.build_bank(lineitem, "l_orderkey", num_shards=4)
+    dup = b.unionByName(b.where(F.col("shard") == 0))
+    keys = lineitem.select("l_orderkey")
+    with pytest.raises(ValueError, match="shard 0 appears more than once"):
+        xb.contains(keys, "l_orderkey", dup)
+    with pytest.raises(ValueError, match="shard 0 appears more than once"):
+        xb.contains_join(keys, "l_orderkey", dup)
+
+
+def test_mixed_variant_union_raises(spark, lineitem):
+    x = xb.build_bank(lineitem, "l_orderkey", variant="xor8", num_shards=4)
+    f = xb.build_bank(lineitem, "l_orderkey", variant="fuse8", num_shards=4)
+    mixed = x.where(F.col("shard") < 2).unionByName(f.where(F.col("shard") >= 2))
+    keys = lineitem.select("l_orderkey")
+    with pytest.raises(ValueError, match="variant"):
+        xb.contains(keys, "l_orderkey", mixed)
+    with pytest.raises(ValueError, match="variant"):
+        xb.contains_join(keys, "l_orderkey", mixed)
+
+
 def test_approx_semi_anti_join_oracle(spark, lineitem):
     """Exact-join relationships: semi ⊇ exact semi, anti ⊆ exact anti,
     and (semi ∪ anti) = all rows."""
@@ -245,8 +303,9 @@ def test_duplicate_flood_skew(spark):
 
 
 def test_resume_kernel_dedup(spark, lineitem, tmp_path):
-    """Resume on the unified one-Arrow-crossing path with dedup='kernel'
-    produces the same bank as a fresh build."""
+    """Resume on the shared build plan with dedup='kernel' (and 'salted',
+    which resume shares with build_bank) produces the same bank as a
+    fresh build."""
     full = xb.build_bank(lineitem, "l_orderkey", num_shards=4, dedup="kernel")
     key = lambda rows: sorted(
         (x["shard"], x["seed"], x["num_keys"], bytes(x["fingerprints"]))
@@ -259,6 +318,12 @@ def test_resume_kernel_dedup(spark, lineitem, tmp_path):
         spark, lineitem, "l_orderkey", path, num_shards=4, dedup="kernel"
     )
     assert key(resumed.collect()) == key(full.collect())
+    path_salted = str(tmp_path / "bank_salted")
+    xb.write_bank(partial, path_salted)
+    salted = xb.resume_build(
+        spark, lineitem, "l_orderkey", path_salted, num_shards=4, dedup="salted"
+    )
+    assert key(salted.collect()) == key(full.collect())
 
 
 def test_composite_key_bank(spark, lineitem):

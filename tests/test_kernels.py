@@ -14,6 +14,7 @@ from xorfilter_spark.hashing import (
     xor8_geometry,
 )
 from xorfilter_spark.kernels.fuse import FuseBuildError, build_fuse, lookup_fuse
+from xorfilter_spark.kernels.probe import VARIANTS, flatten, probe
 from xorfilter_spark.kernels.xor8 import build_xor8, lookup_xor8
 
 RNG = np.random.default_rng(42)
@@ -198,3 +199,76 @@ def test_fuse8x4_space_advantage_large_shard():
         keys, f4["seed"], f4["segment_length"], f4["segment_count"],
         f4["fingerprints"], arity=4,
     ).all()
+
+
+def bank_rows(variant, keys, num_shards):
+    """Bank-shaped shard rows over ``keys`` split by their top digest bits,
+    each shard built alone by the kernels (what build_bank's tasks do)."""
+    k = num_shards.bit_length() - 1
+    shard_of = (keys >> np.uint64(64 - k)).astype(np.int64)
+    rows, filters = [], []
+    for s in range(num_shards):
+        f = build_fn(variant, keys[shard_of == s])
+        filters.append(f)
+        rows.append({
+            "shard": s, "variant": variant, "num_shards": num_shards,
+            "fp_bits": 16 if "16" in variant else 8,
+            "hash_strategy": "xxhash64", "seed": f["seed"],
+            "block_length": f.get("block_length"),
+            "segment_length": f.get("segment_length"),
+            "segment_count": f.get("segment_count"),
+            "fingerprints": f["fingerprints"].tobytes(),
+        })
+    return rows, filters, shard_of
+
+
+@pytest.mark.parametrize("variant", VARIANTS)
+def test_flat_probe_matches_per_shard_lookup(variant):
+    """The flattened multi-shard table answers exactly what each shard's
+    one-shard lookup answers, with zero false negatives; an absent shard
+    answers "not a member"."""
+    rng = np.random.default_rng(7)
+    keys = np.unique(rng.integers(0, 2**64 - 1, 40_000, np.uint64, endpoint=True))
+    rows, filters, shard_of = bank_rows(variant, keys, 8)
+    table = flatten(rows)
+    assert probe(table, keys).all(), "false negative"
+    assert probe(table, keys.view(np.int64)).all()  # Spark's int64 digests
+
+    probes = np.concatenate(
+        [keys, rng.integers(0, 2**64 - 1, 200_000, np.uint64, endpoint=True)]
+    )
+    probe_shard = (probes >> np.uint64(61)).astype(np.int64)
+    got = probe(table, probes)
+    for s, f in enumerate(filters):
+        sl = probes[probe_shard == s]
+        want = probe_fn(variant, f)(sl)
+        assert np.array_equal(got[probe_shard == s], want)
+        assert np.array_equal(probe(table, sl), want)
+
+    partial = flatten(rows[:3] + rows[4:])  # shard 3 absent
+    assert not probe(partial, keys[shard_of == 3]).any()
+    assert probe(partial, keys[shard_of != 3]).all()
+
+
+def test_flatten_refuses_malformed_rows():
+    rng = np.random.default_rng(11)
+    keys = np.unique(rng.integers(0, 2**64 - 1, 4_000, np.uint64, endpoint=True))
+    rows, _, _ = bank_rows("xor8", keys, 4)
+
+    def refuse(bad, match):
+        with pytest.raises(ValueError, match=match):
+            flatten(bad)
+
+    truncated = dict(rows[1], fingerprints=rows[1]["fingerprints"][:-1])
+    refuse([rows[0], truncated, *rows[2:]], "shard 1: .* fingerprint bytes")
+    refuse(rows + [rows[0]], "shard 0 appears more than once")
+    refuse(rows + [dict(rows[0], shard=4)], "shard 4 lies outside")
+    refuse(rows[:3] + [dict(rows[3], num_shards=8)], "num_shards")
+    refuse(rows[:3] + [dict(rows[3], variant="xor16", fp_bits=16)], "variant")
+    refuse(rows[:3] + [dict(rows[3], hash_strategy="murmur64")], "hash_strategy")
+    refuse([dict(r, fp_bits=16) for r in rows], "fp_bits")
+    refuse([dict(rows[0], block_length=None), *rows[1:]], "shard 0: invalid")
+
+    frows, _, _ = bank_rows("fuse8", keys, 4)
+    bad_seg = dict(frows[2], segment_length=frows[2]["segment_length"] - 1)
+    refuse([*frows[:2], bad_seg, frows[3]], "shard 2: segment_length")

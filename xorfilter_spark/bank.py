@@ -30,9 +30,17 @@ Scale notes (designed for ~10^12 keys / 1000 executors):
   regardless of key skew (hash uniformity), and each shard's digest set is
   an exact partition of the key space -> shard-local filters merge by
   concatenation.
-- the probe is a broadcast of (seed + fingerprint arrays) plus a vectorized
-  three-gather XOR per batch; for banks beyond broadcast limits use
-  ``contains_join`` which co-partitions probes and bank rows by shard.
+- the probe is a broadcast of the bank flattened into one probe table
+  (``kernels/probe.py``: per-shard seed/geometry arrays + one fingerprint
+  buffer) and one vectorized gather-XOR pass per batch; for banks beyond
+  broadcast limits use ``contains_join``, which co-partitions probes and
+  bank rows by shard and runs the same kernel per shard.  The flatten is
+  the load boundary: a shard whose bytes disagree with its geometry, a
+  repeated or out-of-range shard id, or mixed bank metadata raises
+  ``ValueError`` instead of answering "not a member".
+- ``build_bank``, ``resume_build`` and the streaming dirty-shard rebuild
+  share one build plan: ``_sharded_digests`` (digest -> non-null -> dedup
+  -> shard column) then ``_build_plan`` (shard shuffle -> peel kernel).
 """
 
 from __future__ import annotations
@@ -46,8 +54,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .kernels.fuse import build_fuse, lookup_fuse
-from .kernels.xor8 import build_xor8, lookup_xor8
+from .kernels.fuse import build_fuse
+from .kernels.probe import (
+    META,
+    VARIANTS,
+    check_meta,
+    flatten,
+    probe,
+    variant_params,
+)
+from .kernels.xor8 import build_xor8
 
 DIGEST = "__digest"
 SHARD = "__shard"
@@ -62,15 +78,6 @@ SHARD = "__shard"
 # count + 64k-keys/shard L2 sizing (r4, commits 74c995c/bee5f6c).
 BUILD_PATH_VERSION = 2
 
-VARIANTS = ("xor8", "xor16", "fuse8", "fuse16", "fuse8x4", "fuse16x4")
-
-
-def _fuse_params(variant: str) -> tuple[int, int]:
-    """(fp_bits, arity) for a fuse variant string.  The x4 variants use the
-    reference's arity-4 geometry (src/fuse8.rs:80-84,101-103) with our
-    4-wise addressing (hashing.fuse4_hash_all) — ~8.6 bits/key for fp8."""
-    return (8 if variant.startswith("fuse8") else 16,
-            4 if variant.endswith("x4") else 3)
 HASH_STRATEGIES = ("xxhash64", "murmur64", "nohash", "siphash13")
 
 BANK_SCHEMA = T.StructType(
@@ -286,13 +293,14 @@ def _build_partition_kernel(variant: str, num_shards: int, hash_strategy: str):
 
 
 def _build_kernel(variant: str, num_shards: int, hash_strategy: str):
+    is_xor, fp_bits, arity = variant_params(variant)
+
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.perf_counter()
         shard = int(pdf[SHARD].iloc[0])
         digests = pdf[DIGEST].to_numpy(dtype=np.int64).astype(np.uint64)
         num_rows = int(digests.size)
-        if variant.startswith("xor"):
-            fp_bits = 8 if variant == "xor8" else 16
+        if is_xor:
             r = build_xor8(digests, fp_bits=fp_bits)
             row = {
                 "block_length": r["block_length"],
@@ -302,7 +310,8 @@ def _build_kernel(variant: str, num_shards: int, hash_strategy: str):
                 "duplicates": num_rows - r["num_keys"],
             }
         else:
-            fp_bits, arity = _fuse_params(variant)
+            # the x4 variants use the reference's arity-4 geometry
+            # (src/fuse8.rs:80-84,101-103) with hashing.fuse4_hash_all
             r = build_fuse(digests, fp_bits=fp_bits, arity=arity)
             row = {
                 "block_length": None,
@@ -417,7 +426,22 @@ def build_bank(
         approx = df.agg(F.approx_count_distinct(key_expr).alias("n")).collect()[0]["n"]
         num_shards = _auto_shards(int(approx), target_keys_per_shard)
     num_shards = int(num_shards)
+    sharded = _sharded_digests(
+        df, key_col, num_shards, hash_strategy, dedup, salt_partitions
+    )
+    return _build_plan(sharded, variant, num_shards, hash_strategy, num_shards)
 
+
+def _sharded_digests(
+    df: DataFrame,
+    key_col,
+    num_shards: int,
+    hash_strategy: str,
+    dedup: str = "kernel",
+    salt_partitions: int = 8,
+) -> DataFrame:
+    """(DIGEST, SHARD) rows of ``df``'s non-null keys, deduplicated per
+    ``dedup`` (see ``build_bank``) — the first half of every build plan."""
     keyed = df.select(digest_col(key_col, hash_strategy).alias(DIGEST)).where(
         F.col(DIGEST).isNotNull()
     )
@@ -444,9 +468,25 @@ def build_bank(
                 T.StructField(DIGEST, T.LongType(), False)
             ]))
         )
-    sharded = keyed.withColumn(SHARD, shard_col(F.col(DIGEST), num_shards))
+    elif dedup != "kernel":
+        raise ValueError("dedup must be 'kernel', 'pre' or 'salted'")
+    return keyed.withColumn(SHARD, shard_col(F.col(DIGEST), num_shards))
+
+
+def _build_plan(
+    sharded: DataFrame,
+    variant: str,
+    num_shards: int,
+    hash_strategy: str,
+    shards_to_build: int,
+) -> DataFrame:
+    """Bank rows for the (DIGEST, SHARD) rows of ``sharded``: the JVM-side
+    shard shuffle sized by ``_build_tasks``, then the peel kernel — the
+    second half of every build plan."""
     return (
-        sharded.repartition(_build_tasks(df.sparkSession, num_shards), SHARD)
+        sharded.repartition(
+            _build_tasks(sharded.sparkSession, shards_to_build), SHARD
+        )
         .select(DIGEST)
         .mapInPandas(
             _build_partition_kernel(variant, num_shards, hash_strategy),
@@ -514,176 +554,18 @@ def bank_expected_size_bytes(bank: DataFrame) -> int:
     total = 0
     for row in bank.select("variant", "num_keys").collect():
         n = int(row["num_keys"])
-        v = row["variant"]
-        if v in ("xor8", "xor16"):
-            capacity, _ = xor8_geometry(n)
-            total += capacity * (1 if v == "xor8" else 2)
+        is_xor, fp_bits, arity = variant_params(row["variant"])
+        if is_xor:
+            slots, _ = xor8_geometry(n)
         else:
-            fp_bits, arity = _fuse_params(v)
-            total += fuse_geometry(n, arity)["array_length"] * fp_bits // 8
+            slots = fuse_geometry(n, arity)["array_length"]
+        total += slots * fp_bits // 8
     return total
 
 
 # ---------------------------------------------------------------------------
 # probe
 # ---------------------------------------------------------------------------
-
-def _bank_to_dict(rows) -> dict:
-    out = {}
-    for r in rows:
-        fp_dtype = np.uint8 if r["fp_bits"] == 8 else np.dtype("<u2")
-        out[int(r["shard"])] = {
-            "variant": r["variant"],
-            "seed": _to_u64(int(r["seed"])),
-            "block_length": r["block_length"],
-            "segment_length": r["segment_length"],
-            "segment_count": r["segment_count"],
-            "fingerprints": np.frombuffer(r["fingerprints"], dtype=fp_dtype),
-        }
-    return out
-
-
-def _lookup_shard(entry: dict, digests: np.ndarray) -> np.ndarray:
-    if entry["variant"].startswith("xor"):
-        return lookup_xor8(digests, entry["seed"], entry["block_length"], entry["fingerprints"])
-    return lookup_fuse(
-        digests,
-        entry["seed"],
-        entry["segment_length"],
-        entry["segment_count"],
-        entry["fingerprints"],
-        arity=_fuse_params(entry["variant"])[1],
-    )
-
-
-def _lookup_batch(bank_dict: dict, num_shards: int, digests_i64: np.ndarray) -> np.ndarray:
-    """Vectorized membership for a mixed-shard digest batch.
-
-    Sort-based grouping: one argsort + contiguous per-shard slices instead
-    of a boolean-mask scan per shard (O(n log n) vs O(n x shards))."""
-    u = digests_i64.astype(np.uint64)
-    out = np.zeros(u.size, dtype=bool)
-    k = num_shards.bit_length() - 1
-    if not k:
-        entry = bank_dict.get(0)
-        return _lookup_shard(entry, u) if entry is not None else out
-    shards = (u >> np.uint64(64 - k)).astype(np.int64)
-    order = np.argsort(shards, kind="stable")
-    ss = shards[order]
-    bounds = np.searchsorted(ss, np.arange(num_shards + 1))
-    for s in np.unique(ss):
-        entry = bank_dict.get(int(s))
-        if entry is None:
-            continue  # shard had zero keys -> definitely not a member
-        idx = order[bounds[s] : bounds[s + 1]]
-        out[idx] = _lookup_shard(entry, u[idx])
-    return out
-
-
-def _bank_to_flat(rows) -> dict:
-    """Flatten bank rows into per-shard parallel numpy arrays + ONE
-    concatenated fingerprint buffer, so a mixed-shard probe batch needs no
-    per-shard Python loop at all — every per-shard parameter (seed, geometry,
-    fingerprint offset) is gathered per ROW and the whole batch runs as a
-    single vectorized pass (VERDICT r1 item 1: the 256-entry dict loop was
-    the probe bottleneck at high shard counts)."""
-    num_shards = int(rows[0]["num_shards"])
-    variant = rows[0]["variant"]
-    fp_bits = int(rows[0]["fp_bits"])
-    fp_dtype = np.uint8 if fp_bits == 8 else np.dtype("<u2")
-
-    seed = np.zeros(num_shards, dtype=np.uint64)
-    off = np.zeros(num_shards, dtype=np.int64)
-    present = np.zeros(num_shards, dtype=bool)
-    bl = np.zeros(num_shards, dtype=np.uint64)      # xor8 block_length
-    sl = np.zeros(num_shards, dtype=np.uint64)      # fuse segment_length
-    mask = np.zeros(num_shards, dtype=np.uint64)    # fuse segment_length_mask
-    scl = np.zeros(num_shards, dtype=np.uint64)     # fuse segment_count_length
-
-    chunks = []
-    pos = 0
-    for r in sorted(rows, key=lambda r: int(r["shard"])):
-        s = int(r["shard"])
-        present[s] = True
-        seed[s] = _to_u64(int(r["seed"]))
-        off[s] = pos
-        arr = np.frombuffer(r["fingerprints"], dtype=fp_dtype)
-        chunks.append(arr)
-        pos += arr.size
-        if variant.startswith("xor"):
-            bl[s] = r["block_length"]
-        else:
-            sl[s] = r["segment_length"]
-            mask[s] = r["segment_length"] - 1
-            scl[s] = r["segment_count"] * r["segment_length"]
-    fp = np.concatenate(chunks) if chunks else np.zeros(1, dtype=fp_dtype)
-    return {
-        "num_shards": num_shards,
-        "k": num_shards.bit_length() - 1,
-        "variant": variant,
-        "arity": 3 if variant.startswith("xor") else _fuse_params(variant)[1],
-        "seed": seed,
-        "off": off,
-        "present": present,
-        "bl": bl,
-        "sl": sl,
-        "mask": mask,
-        "scl": scl,
-        "fp": fp,
-    }
-
-
-def _lookup_flat(flat: dict, digests_i64: np.ndarray) -> np.ndarray:
-    """Single-pass vectorized membership for a mixed-shard digest batch:
-    per-row parameter gathers + elementwise hash math + 3 fingerprint
-    gathers.  No sort, no per-shard slicing, no Python loop."""
-    from .hashing import mulhi, murmur64, rotl64
-
-    u = digests_i64.astype(np.uint64)
-    k = flat["k"]
-    if k:
-        s = (u >> np.uint64(64 - k)).astype(np.int64)
-    else:
-        s = np.zeros(u.size, dtype=np.int64)
-    h = murmur64(u + flat["seed"][s])  # mixsplit with per-row seed
-    fp = flat["fp"]
-    off = flat["off"][s]
-    m32 = np.uint64(0xFFFFFFFF)
-    if flat["variant"].startswith("xor"):
-        bl = flat["bl"][s]
-        f = (h ^ (h >> np.uint64(32))).astype(fp.dtype)
-        g0 = off + (((h & m32) * bl) >> np.uint64(32)).astype(np.int64)
-        g1 = off + bl.astype(np.int64) + (
-            ((rotl64(h, 21) & m32) * bl) >> np.uint64(32)
-        ).astype(np.int64)
-        g2 = off + 2 * bl.astype(np.int64) + (
-            ((rotl64(h, 42) & m32) * bl) >> np.uint64(32)
-        ).astype(np.int64)
-        out = f == (fp[g0] ^ fp[g1] ^ fp[g2])
-    else:
-        sl = flat["sl"][s]
-        mask = flat["mask"][s]
-        f = (h ^ (h >> np.uint64(32))).astype(fp.dtype)
-        # u32 addressing arithmetic is exact in u64: indices < 2^32, no wrap
-        h0 = mulhi(h, flat["scl"][s])
-        if flat["arity"] == 4:
-            # 4-wise addressing (hashing.fuse4_hash_all): disjoint 18-bit
-            # windows at shifts 36/18/0; mask < 2^18 makes the explicit
-            # low-54-bit truncation a no-op here
-            h1 = (h0 + sl) ^ ((h >> np.uint64(36)) & mask)
-            h2 = (h0 + sl + sl) ^ ((h >> np.uint64(18)) & mask)
-            h3 = (h0 + sl + sl + sl) ^ (h & mask)
-            acc = f ^ fp[off + h3.astype(np.int64)]
-        else:
-            h1 = (h0 + sl) ^ ((h >> np.uint64(18)) & mask)
-            h2 = (h0 + sl + sl) ^ (h & mask)
-            acc = f
-        g0 = off + h0.astype(np.int64)
-        g1 = off + h1.astype(np.int64)
-        g2 = off + h2.astype(np.int64)
-        out = (acc ^ fp[g0] ^ fp[g1] ^ fp[g2]) == 0
-    return out & flat["present"][s]  # empty shard -> definitely not a member
-
 
 def contains(
     df: DataFrame,
@@ -706,20 +588,22 @@ def contains(
     columns stay JVM-side; the plan remains a zero-shuffle narrow map.
     Null keys are gated JVM-side (``coalesce`` + ``when``) so the UDF input
     is non-null int64 — never a lossy float64 round-trip.
+
+    The collected rows pass through ``kernels.probe.flatten`` before the
+    broadcast, so a malformed bank raises ``ValueError`` here, before any
+    probe runs.
     """
     rows = bank.collect()
     if not rows:
         return df.withColumn(out_col, F.lit(False))
-    hash_strategy = rows[0]["hash_strategy"]
-    spark = df.sparkSession
-    b = spark.sparkContext.broadcast(_bank_to_flat(rows))
+    table = flatten(rows)
+    b = df.sparkSession.sparkContext.broadcast(table)
 
     @F.pandas_udf(T.BooleanType())
     def _probe(digests: pd.Series) -> pd.Series:
-        d = digests.to_numpy(dtype=np.int64)
-        return pd.Series(_lookup_flat(b.value, d))
+        return pd.Series(probe(b.value, digests.to_numpy(dtype=np.int64)))
 
-    dig = digest_col(key_col, hash_strategy)
+    dig = digest_col(key_col, table["hash_strategy"])
     return df.withColumn(
         out_col,
         F.when(dig.isNull(), F.lit(False)).otherwise(
@@ -734,7 +618,6 @@ def contains_join(
     bank: DataFrame,
     out_col: str = "contains",
     payload: str = "auto",
-    join_back: str = "auto",
 ) -> DataFrame:
     """Shard-aligned cogroup probe for banks too large to broadcast.
 
@@ -762,25 +645,22 @@ def contains_join(
       string key — always picks 'rows': the key IS the freight either way,
       and 'rows' skips the join-back.)
 
-    ``join_back`` governs how the digest path's hit table reaches the full
-    rows.  ``'auto'`` (default): no hint — with AQE on, Spark sees the hit
-    table's ACTUAL runtime size after the cogroup stage and converts the
-    join to broadcast (+ local shuffle read on the probe side) exactly
-    when it is small enough; a large hit set stays a parallel shuffled
-    join.  Measured at 10M probes / ~5M hits on local[32], forcing
-    broadcast cost 11.4s (driver-side collect + single-threaded hash-
-    relation build of a 10M-row table) vs 2.5s unhinted — the runtime-
-    stats decision is the one that survives both regimes.  ``'broadcast'``:
-    force the hint — guarantees the probe table is never shuffled, for
-    clusters where probe-side shuffle I/O is the binding constraint and
-    the distinct-hit set is known small (≲10^7).  ``'shuffle'``: force a
-    digest-keyed sort-merge join — the ≥10^8-10^9-distinct-probes regime
-    where a broadcast build could never fit the driver.
+    The digest path's join-back carries no hint: with AQE on, Spark sees
+    the hit table's ACTUAL runtime size after the cogroup stage and
+    converts the join to broadcast (+ local shuffle read on the probe
+    side) exactly when it is small enough; a large hit set stays a
+    parallel shuffled join.  (Measured at 10M probes / ~5M hits on
+    local[32], a forced broadcast cost 11.4s — driver-side collect +
+    single-threaded hash-relation build — vs 2.5s unhinted.)
+
+    Validation: the bank's shard ids and metadata are collected (without
+    fingerprints) and checked here, raising ``ValueError`` before any probe
+    runs; each shard's fingerprint geometry is checked by
+    ``kernels.probe.flatten`` inside its cogroup task, which fails the job
+    with a ``ValueError`` naming the shard.
     """
     if payload not in ("auto", "rows", "digest"):
         raise ValueError("payload must be 'auto', 'rows' or 'digest'")
-    if join_back not in ("auto", "broadcast", "shuffle"):
-        raise ValueError("join_back must be 'auto', 'broadcast' or 'shuffle'")
     if payload == "auto":
         key_names = {
             c for c in (key_col if isinstance(key_col, (list, tuple)) else [key_col])
@@ -790,7 +670,10 @@ def contains_join(
             _field_width(f) for f in df.schema.fields if f.name not in key_names
         )
         payload = "digest" if width > 64 else "rows"
-    meta = bank.select("num_shards", "hash_strategy").first()
+    meta_rows = bank.select("shard", *META).collect()
+    if not meta_rows:
+        return df.withColumn(out_col, F.lit(False))
+    meta = check_meta(meta_rows)
     num_shards, hash_strategy = int(meta["num_shards"]), meta["hash_strategy"]
     if payload == "rows":
         return _contains_join_rows(
@@ -809,11 +692,7 @@ def contains_join(
         d = np.unique(probe_pdf[DIGEST].to_numpy(dtype=np.int64))
         if bank_pdf.empty:
             return pd.DataFrame({DIGEST: d[:0]})
-        entry = _bank_to_dict(bank_pdf.to_dict("records"))[
-            int(bank_pdf["shard"].iloc[0])
-        ]
-        res = _lookup_shard(entry, d.astype(np.uint64))
-        return pd.DataFrame({DIGEST: d[res]})
+        return pd.DataFrame({DIGEST: d[_probe_group(bank_pdf, d)]})
 
     hits = (
         digests.groupBy(SHARD)
@@ -821,15 +700,16 @@ def contains_join(
         .applyInPandas(probe_group, hit_schema)
         .withColumn(hit_col, F.lit(True))
     )
-    if join_back == "broadcast":
-        hits = F.broadcast(hits)
-    elif join_back == "shuffle":
-        hits = hits.hint("merge")
     return (
         keyed.join(hits, on=DIGEST, how="left")
         .withColumn(out_col, F.coalesce(F.col(hit_col), F.lit(False)))
         .drop(DIGEST, hit_col)
     )
+
+
+def _probe_group(bank_pdf: pd.DataFrame, digests: np.ndarray) -> np.ndarray:
+    """Membership of one cogroup's digests in its shard's bank rows."""
+    return probe(flatten(bank_pdf.to_dict("records")), digests)
 
 
 def _field_width(f: T.StructField) -> int:
@@ -869,11 +749,8 @@ def _contains_join_rows(
         if bank_pdf.empty:
             out[out_col] = False
             return out
-        entry = _bank_to_dict(bank_pdf.to_dict("records"))[
-            int(bank_pdf["shard"].iloc[0])
-        ]
-        d = probe_pdf[DIGEST].to_numpy(dtype=np.int64, na_value=0).astype(np.uint64)
-        res = _lookup_shard(entry, d)
+        d = probe_pdf[DIGEST].to_numpy(dtype=np.int64, na_value=0)
+        res = _probe_group(bank_pdf, d)
         res[probe_pdf[DIGEST].isna().to_numpy()] = False
         out[out_col] = res
         return out
@@ -1036,43 +913,42 @@ def resume_build(
     variant: str = "xor8",
     num_shards: int = 32,
     hash_strategy: str = "xxhash64",
-    dedup: str = "pre",
+    dedup: str = "kernel",
 ) -> DataFrame:
     """Resume a (possibly killed) bank build: rebuild only shards missing
-    from the checkpoint, append them, and return the full bank."""
+    from the checkpoint, append them, and return the full bank.  Same plan
+    and ``dedup`` modes as ``build_bank``.
+
+    A checkpoint built under another ``num_shards``, ``variant`` or
+    ``hash_strategy`` (or holding repeated / out-of-range shard ids) raises
+    ``ValueError``: its shard ids would name other key ranges, and mixing
+    them in would answer "not a member" for indexed keys."""
+    if variant not in VARIANTS:
+        raise ValueError(f"variant must be one of {VARIANTS}")
     # distinguish "no checkpoint yet" from a real read failure: a transient
     # error here must NOT fall through to mode('overwrite') and destroy the
     # already-built shards (same contract as the streaming swap; ADVICE r2)
+    done = set()
     if _path_exists(spark, checkpoint_path):
-        existing = read_bank(spark, checkpoint_path)
-        done = {r["shard"] for r in existing.select("shard").collect()}
-    else:
-        existing = None
-        done = set()
+        rows = read_bank(spark, checkpoint_path).select("shard", *META).collect()
+        if rows:
+            meta = check_meta(rows)
+            want = {"num_shards": num_shards, "variant": variant,
+                    "hash_strategy": hash_strategy}
+            for f, v in want.items():
+                if meta[f] != v:
+                    raise ValueError(
+                        f"checkpoint {checkpoint_path} was built with "
+                        f"{f}={meta[f]!r}, resume asked for {f}={v!r}"
+                    )
+            done = {int(r["shard"]) for r in rows}
 
-    keyed = df.select(digest_col(key_col, hash_strategy).alias(DIGEST)).where(
-        F.col(DIGEST).isNotNull()
-    )
-    if dedup == "pre":
-        keyed = keyed.dropDuplicates([DIGEST])
-    sharded = keyed.withColumn(SHARD, shard_col(F.col(DIGEST), num_shards))
+    sharded = _sharded_digests(df, key_col, num_shards, hash_strategy, dedup)
     if done:
         sharded = sharded.where(~F.col(SHARD).isin(*done))
-    # same one-Arrow-crossing plan as build_bank: JVM-side shard shuffle
-    # over Tungsten rows, digests cross to Python exactly once (resume used
-    # to take the slower groupBy.applyInPandas path — VERDICT r1 item 7)
-    new_rows = (
-        sharded.repartition(
-            _build_tasks(spark, max(num_shards - len(done), 1)), SHARD
-        )
-        .select(DIGEST)
-        .mapInPandas(
-            _build_partition_kernel(variant, num_shards, hash_strategy),
-            BANK_SCHEMA,
-        )
+    new_rows = _build_plan(
+        sharded, variant, num_shards, hash_strategy,
+        max(num_shards - len(done), 1),
     )
-    if existing is not None and done:
-        new_rows.write.mode("append").parquet(checkpoint_path)
-    else:
-        new_rows.write.mode("overwrite").parquet(checkpoint_path)
+    new_rows.write.mode("append" if done else "overwrite").parquet(checkpoint_path)
     return read_bank(spark, checkpoint_path)

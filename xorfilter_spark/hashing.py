@@ -92,9 +92,11 @@ def mixsplit(keys: np.ndarray, seed: int) -> np.ndarray:
     return murmur64(keys.astype(np.uint64) + np.uint64(seed & MASK64))
 
 
-def reduce32(hash32: np.ndarray, n: int) -> np.ndarray:
-    """Lemire fast-range: map 32-bit hashes uniformly into [0, n)."""
-    return ((hash32.astype(np.uint64) * np.uint64(n)) >> _U32).astype(np.uint32)
+def reduce32(hash32: np.ndarray, n) -> np.ndarray:
+    """Lemire fast-range: map 32-bit hashes uniformly into [0, n); ``n`` is
+    a scalar or a per-row array (n < 2**32)."""
+    n = np.asarray(n, dtype=np.uint64)
+    return ((hash32.astype(np.uint64) * n) >> _U32).astype(np.uint32)
 
 
 def fingerprint64(h: np.ndarray) -> np.ndarray:
@@ -113,17 +115,12 @@ def mulhi(a: np.ndarray, b) -> np.ndarray:
     numpy has no uint128; split a into 32-bit limbs.  The binary-fuse
     addressing only ever multiplies by ``segment_count_length`` (< 2**32),
     so the limb products fit in uint64 exactly.  ``b`` may be a scalar or a
-    per-row uint64 array (the flattened mixed-shard probe path).
+    per-row array (the flattened mixed-shard probe path).
     """
-    a = a.astype(np.uint64)
-    if isinstance(b, np.ndarray):
-        bb = b.astype(np.uint64)
-        if (bb >> np.uint64(32)).any():
-            raise ValueError("mulhi helper requires b < 2**32")
-    else:
-        if int(b) >> 32:
-            raise ValueError("mulhi helper requires b < 2**32")
-        bb = np.uint64(b)
+    a = np.asarray(a, dtype=np.uint64)
+    bb = np.asarray(b, dtype=np.uint64)
+    if bb.size and int(bb.max()) >> 32:
+        raise ValueError("mulhi helper requires b < 2**32")
     lo = (a & np.uint64(MASK32)) * bb
     hi = (a >> _U32) * bb
     return (hi + (lo >> _U32)) >> _U32
@@ -131,6 +128,12 @@ def mulhi(a: np.ndarray, b) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # geometry
+#
+# The *_hash_all addressing functions below are the only slot-index
+# arithmetic in the package: the build peels and the probe kernel
+# (kernels/probe.py) both call them.  Geometry values may be scalars (one
+# filter) or per-row arrays (a mixed-shard probe batch gathers each row's
+# shard geometry); numpy broadcasting covers both.
 # ---------------------------------------------------------------------------
 
 def xor8_geometry(size: int) -> tuple[int, int]:
@@ -213,8 +216,8 @@ def fuse_hash_all(hashes: np.ndarray, geom: dict) -> tuple[np.ndarray, np.ndarra
     h1/h2 advance one segment each, XOR-perturbed by hash bits masked to the
     segment, which keeps each hi inside its segment window.
     """
-    sl = np.uint32(geom["segment_length"])
-    mask = np.uint32(geom["segment_length_mask"])
+    sl = np.asarray(geom["segment_length"], dtype=np.uint32)
+    mask = np.asarray(geom["segment_length_mask"], dtype=np.uint32)
     h0 = mulhi(hashes, geom["segment_count_length"]).astype(np.uint32)
     h1 = h0 + sl
     h2 = h1 + sl
@@ -238,8 +241,8 @@ def fuse4_hash_all(
     3-wise 36-bit/18-bit-window split, widened so all three perturbations
     stay independent even at the 2^18 segment-length cap.
     """
-    sl = np.uint32(geom["segment_length"])
-    mask = np.uint32(geom["segment_length_mask"])
+    sl = np.asarray(geom["segment_length"], dtype=np.uint32)
+    mask = np.asarray(geom["segment_length_mask"], dtype=np.uint32)
     hh = hashes & np.uint64((1 << 54) - 1)
     h0 = mulhi(hashes, geom["segment_count_length"]).astype(np.uint32)
     h1 = (h0 + sl) ^ ((hh >> np.uint64(36)).astype(np.uint32) & mask)
@@ -248,7 +251,7 @@ def fuse4_hash_all(
     return h0, h1, h2, h3
 
 
-def xor8_hash_all(hashes: np.ndarray, block_length: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def xor8_hash_all(hashes: np.ndarray, block_length) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Slot indices for xor8: Lemire-reduced rotations into 3 disjoint blocks
     (reference src/xor8/filter.rs:166-217).  Returned h1/h2 are block-local;
     add block_length offsets for global addressing."""

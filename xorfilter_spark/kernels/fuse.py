@@ -47,6 +47,7 @@ from ..hashing import (
     mixsplit,
     seed_sequence,
 )
+from .probe import probe, shard_table
 
 MAX_ITERATIONS = 100  # reference src/fuse8.rs:26
 
@@ -57,19 +58,6 @@ class FuseBuildError(RuntimeError):
 
 def _mod3(x: np.ndarray) -> np.ndarray:
     return np.where(x > 2, x - 3, x)
-
-
-def _hash_at(index: np.ndarray, hashes: np.ndarray, geom: dict) -> np.ndarray:
-    """binary_fuse8_hash(index, hash) vectorized over matching arrays
-    (reference src/fuse8.rs:194-203)."""
-    from ..hashing import mulhi
-
-    h = mulhi(hashes, geom["segment_count_length"])
-    h += index.astype(np.uint64) * np.uint64(geom["segment_length"])
-    hh = hashes & np.uint64((1 << 36) - 1)
-    shift = (np.uint64(36) - np.uint64(18) * index.astype(np.uint64))
-    h ^= (hh >> shift) & np.uint64(geom["segment_length_mask"])
-    return h.astype(np.int64)
 
 
 def _slots(hashes: np.ndarray, geom: dict, arity: int) -> np.ndarray:
@@ -240,21 +228,10 @@ def lookup_fuse(digests: np.ndarray, seed: int, segment_length: int,
                 segment_count: int, fingerprints: np.ndarray,
                 arity: int = 3) -> np.ndarray:
     """Vectorized probe (reference src/fuse8.rs:543-551; 4-wise adds one
-    more fingerprint gather)."""
-    digests = np.asarray(digests).astype(np.uint64)
-    if digests.size == 0:
-        return np.zeros(0, dtype=bool)
-    geom = {
-        "segment_length": segment_length,
-        "segment_length_mask": segment_length - 1,
-        "segment_count": segment_count,
-        "segment_count_length": segment_count * segment_length,
-    }
-    fp = np.asarray(fingerprints)
-    h = mixsplit(digests, seed)
-    f = fingerprint64(h).astype(fp.dtype)
-    acc = f
-    hs = fuse_hash_all(h, geom) if arity == 3 else fuse4_hash_all(h, geom)
-    for hi in hs:
-        acc = acc ^ fp[hi]
-    return acc == 0
+    more fingerprint gather): the one-shard call of the shared probe
+    kernel (``kernels.probe``)."""
+    return probe(
+        shard_table(seed, fingerprints, segment_length=segment_length,
+                    segment_count=segment_count, arity=arity),
+        digests,
+    )

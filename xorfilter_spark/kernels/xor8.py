@@ -40,6 +40,7 @@ from ..hashing import (
     xor8_geometry,
     xor8_hash_all,
 )
+from .probe import probe, shard_table
 
 
 def _trio(hashes: np.ndarray, block_length: int) -> np.ndarray:
@@ -215,18 +216,9 @@ def build_xor8(digests: np.ndarray, fp_bits: int = 8) -> dict:
 
 
 def lookup_xor8(digests: np.ndarray, seed: int, block_length: int, fingerprints: np.ndarray) -> np.ndarray:
-    """Vectorized probe (reference src/xor8/filter.rs:166-176)."""
-    digests = np.asarray(digests).astype(np.uint64)
-    if digests.size == 0:
-        return np.zeros(0, dtype=bool)
+    """Vectorized probe (reference src/xor8/filter.rs:166-176): the
+    one-shard call of the shared probe kernel (``kernels.probe``)."""
     fp = np.asarray(fingerprints)
     if fp.dtype not in (np.dtype(np.uint8), np.dtype("<u2")):
         fp = fp.astype(np.uint8)
-    h = mixsplit(digests, seed)
-    f = fingerprint64(h).astype(fp.dtype)
-    h0, h1, h2 = xor8_hash_all(h, block_length)
-    return f == (
-        fp[h0]
-        ^ fp[h1.astype(np.int64) + block_length]
-        ^ fp[h2.astype(np.int64) + 2 * block_length]
-    )
+    return probe(shard_table(seed, fp, block_length=block_length), digests)
